@@ -20,9 +20,11 @@ Spark equivalents:
 - ``value DOUBLE``.
 
 At scale the samples table is stored as Parquet partitioned by ``date(ts)``
-with rows sorted by ``(metric_name, labels, ts)`` inside each file so that
-min/max row-group statistics prune on metric_name, the analog of the
-MergeTree primary key (reference ``README.md:26``).
+with rows sorted by ``(metric_name, labels, ts)`` inside each file, so that
+parquet's per-page column index on metric_name lets a pushed name filter
+skip pages, the analog of the MergeTree primary key (reference
+``README.md:26``).  The write sort leads with the partition column, or
+Spark's partitioned writer replaces it (``sources.samples_store``).
 """
 
 from __future__ import annotations

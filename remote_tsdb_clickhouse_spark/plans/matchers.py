@@ -29,7 +29,8 @@ lookaround) that RE2 would reject, so we proactively reject those constructs
 to stay within the common dialect; see :func:`check_re2_portable`.
 
 All predicates are pure Catalyst expressions (no UDFs): name/time predicates
-push down to the Parquet scan, and array predicates run inside whole-stage
+push down to the Parquet scan (a ``__name__`` regex through its literal
+prefix, :func:`literal_prefix`), and array predicates run inside whole-stage
 codegen before the aggregation shuffle.
 """
 
@@ -170,6 +171,33 @@ def _anchored(pattern: str) -> str:
     return "^" + _to_java_dialect(check_re2_portable(pattern)) + "$"
 
 
+#: Characters that end a regex's literal prefix: every metacharacter
+#: outside a class, plus the backslash (escapes, ``\Q`` quoting, classes
+#: like ``\d``).  ``(`` also covers inline flags such as ``(?i)``.
+_REGEX_META = frozenset("\\.^$|?*+()[]{}")
+
+#: Quantifiers that make the atom before them optional.
+_OPTIONAL_QUANTIFIERS = frozenset("*?{")
+
+
+def literal_prefix(pattern: str) -> str:
+    """The literal text every string matched by ``_anchored(pattern)``
+    starts with ("" when none can be proven).
+
+    Conservative on purpose: any ``|`` gives no prefix (concat-anchoring
+    makes ``a|b`` mean ``^a|b$``, so a branch may match anywhere), the scan
+    stops at the first metacharacter or backslash, and a literal followed
+    by ``*``, ``?`` or ``{`` may be absent, so it is dropped.
+    """
+    if "|" in pattern:
+        return ""
+    for i, ch in enumerate(pattern):
+        if ch in _REGEX_META:
+            end = i - 1 if ch in _OPTIONAL_QUANTIFIERS else i
+            return pattern[: max(end, 0)]
+    return pattern
+
+
 def joined_label(name: str, value: str) -> str:
     """The storage encoding of one label: ``name=value`` (``write.go:43``)."""
     return f"{name}={value}"
@@ -194,7 +222,11 @@ def compile_matcher(
         if m.type == MatcherType.NEQ:
             return col != F.lit(m.value)  # F4 — "Don't do this." (full scan)
         if m.type == MatcherType.RE:
-            return col.rlike(_anchored(m.value))  # F5
+            cond = col.rlike(_anchored(m.value))  # F5
+            # implied by the regex; unlike rlike, Spark pushes it to the
+            # parquet scan, which skips the pages outside the prefix
+            prefix = literal_prefix(m.value)
+            return col.startswith(prefix) & cond if prefix else cond
         if m.type == MatcherType.NRE:
             return ~col.rlike(_anchored(m.value))  # F6
         raise UnsupportedMatcherError(f"unsupported LabelMatcher type {m.type!r}")

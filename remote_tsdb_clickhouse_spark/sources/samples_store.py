@@ -7,10 +7,20 @@ The reference's storage is one ClickHouse MergeTree table ordered by
 - **Parquet, partitioned by** ``ts_date=date(ts)`` — partition pruning
   serves the time-range predicates F1/F2 exactly where MergeTree's primary
   key prunes granules by time.
-- **Sorted within files by** ``(metric_name, labels, ts)`` via
-  ``sortWithinPartitions`` at write — parquet row-group min/max statistics
-  on ``metric_name`` then prune like the MergeTree primary-key prefix, and
-  series rows are physically adjacent (cheap grouping).
+- **Sorted within files by** ``(metric_name, labels, ts)``: every write
+  goes through :func:`write_sorted_partitions`, which sorts by
+  ``(ts_date, metric_name, labels, ts)``.  A partitioned write needs its
+  rows ordered by the partition column; when the requested sort does not
+  start with it, Spark replaces that sort with one on ``ts_date`` alone and
+  the files come out unsorted.  With the partition column leading, the
+  requirement is already met and the order survives.  What prunes is
+  parquet's per-page column index on ``metric_name``: a pushed
+  ``metric_name`` predicate skips the pages whose min/max exclude it, like
+  the MergeTree primary-key prefix skips granules.  Row-group statistics
+  do not help here, since a compacted day is one row group.  Series rows
+  are physically adjacent too (cheap grouping).  Stores written before the
+  partition column led the sort stay unsorted until one :meth:`compact`
+  rewrites them.
 - **Append-atomicity**: each ``append()`` lands via parquet's committed-file
   protocol — readers never see partial batches, the analog of the
   reference's per-request transaction (``write.go:14-22,60``).
@@ -40,6 +50,25 @@ from remote_tsdb_clickhouse_spark.model import (
 )
 
 
+#: Physical row order of every store file.  The partition column leads so
+#: that the partitioned writer's own ordering requirement is a prefix of it
+#: (see the module docstring); the rest is the MergeTree ``ORDER BY``.
+SORT_KEYS = (PARTITION_COLUMN, "metric_name", "labels", "ts")
+
+
+def write_sorted_partitions(df: DataFrame, path: str, mode: str, dynamic: bool = False) -> None:
+    """Write ``df`` (carrying ``ts_date``) as parquet partitioned by date,
+    each file sorted by ``(metric_name, labels, ts)``.
+
+    ``dynamic`` selects dynamic partition overwrite: only the partitions
+    present in ``df`` are replaced.
+    """
+    w = df.sortWithinPartitions(*SORT_KEYS).write.partitionBy(PARTITION_COLUMN)
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.mode(mode).parquet(path)
+
+
 class SamplesStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -62,17 +91,14 @@ class SamplesStore:
     def append(self, df: DataFrame) -> None:
         """Append canonical-schema rows (one micro-batch / one request).
 
-        Sorting within partitions gives every file the MergeTree-like
-        physical order; partitionBy(date) keeps time pruning.
+        Every file gets the MergeTree-like physical order; partitionBy(date)
+        keeps time pruning.
         """
         with self._append_lock:
-            (
-                df.select(*SAMPLES_FIELDS)
-                .withColumn(PARTITION_COLUMN, F.to_date("ts"))
-                .sortWithinPartitions("metric_name", "labels", "ts")
-                .write.partitionBy(PARTITION_COLUMN)
-                .mode("append")
-                .parquet(self.path)
+            write_sorted_partitions(
+                df.select(*SAMPLES_FIELDS).withColumn(PARTITION_COLUMN, F.to_date("ts")),
+                self.path,
+                "append",
             )
 
     # -- read path ----------------------------------------------------------
@@ -83,7 +109,7 @@ class SamplesStore:
         Keeps ``ts_date`` by default so the read plan can attach its
         partition-pruning predicate (``plans.read_plan
         .partition_pruning_filter``); metric_name/ts predicates additionally
-        prune row groups via parquet stats (``PushedFilters`` in
+        skip parquet pages via the column index (``PushedFilters`` in
         ``.explain``).
         """
         df = self.spark.read.schema(PARTITIONED_SAMPLES_SCHEMA).parquet(self.path)
@@ -132,13 +158,7 @@ class SamplesStore:
             r[0] for r in survivors.select(PARTITION_COLUMN).distinct().collect()
         }
         if survivor_dates:
-            (
-                survivors.sortWithinPartitions("metric_name", "labels", "ts")
-                .write.partitionBy(PARTITION_COLUMN)
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(self.path)
-            )
+            write_sorted_partitions(survivors, self.path, "overwrite", dynamic=True)
         jvm = self.spark._jvm
         hconf = self.spark._jsc.hadoopConfiguration()
         for d in sorted(affected_dates - survivor_dates):
@@ -213,11 +233,9 @@ class SamplesStore:
         """Rewrite the table at a target file count per date partition —
         the OPTIMIZE analog for the micro-batch small-file problem."""
         df = self.read().withColumn(PARTITION_COLUMN, F.to_date("ts")).localCheckpoint()
-        (
-            df.repartition(files_per_partition, F.col(PARTITION_COLUMN))
-            .sortWithinPartitions("metric_name", "labels", "ts")
-            .write.partitionBy(PARTITION_COLUMN)
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(self.path)
+        write_sorted_partitions(
+            df.repartition(files_per_partition, F.col(PARTITION_COLUMN)),
+            self.path,
+            "overwrite",
+            dynamic=True,
         )

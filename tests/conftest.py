@@ -23,6 +23,30 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def unsorted_store_files():
+    """Returns a checker: the parquet files under a store root whose rows
+    are not in the ``(metric_name, labels, ts)`` order every store write
+    promises.  Reads each file back with pyarrow, so it sees the physical
+    order, not what a Spark scan would re-sort."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    def check(root: str) -> list[str]:
+        files = sorted(glob.glob(os.path.join(root, "ts_date=*", "*.parquet")))
+        assert files, f"no parquet files under {root}"
+        bad = []
+        for f in files:
+            rows = pq.read_table(f, columns=["metric_name", "labels", "ts"]).to_pylist()
+            keys = [(r["metric_name"], r["labels"], r["ts"]) for r in rows]
+            if keys != sorted(keys):
+                bad.append(os.path.relpath(f, root))
+        return bad
+
+    return check
+
+
 def ts(y, mo, d, h=0, mi=0, s=0):
     return datetime(y, mo, d, h, mi, s, tzinfo=timezone.utc)
 

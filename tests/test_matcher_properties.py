@@ -18,7 +18,7 @@ from __future__ import annotations
 import re as pyre
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -27,6 +27,7 @@ from remote_tsdb_clickhouse_spark.plans.matchers import (
     LabelMatcher,
     MatcherType,
     compile_matchers,
+    literal_prefix,
 )
 
 # -- adversarial corpus ------------------------------------------------------
@@ -96,6 +97,9 @@ _literal = st.sampled_from(
 _regex = st.sampled_from(
     ["a.*", ".*", "(api|db)", "[a-z]+", "pr.d", "a=b", ".*=.*", "(?:a|d).*",
      "u?p", "d.wn",
+     # literal prefixes (a startswith is ANDed in for __name__): kept whole,
+     # and cut before an optional atom
+     "up.*", "do?wn", "up2?",
      # TOP-LEVEL alternation: anchors per-branch under the reference's
      # concat semantics ('^api|db$' = prefix-api OR suffix-db)
      "api|db", "up|down"]
@@ -143,3 +147,45 @@ def test_named_group_translation(spark, corpus_df):
     ms = [LabelMatcher(MatcherType.RE, "__name__", "(?P<g>up|down)")]
     got = {r.metric_name for r in corpus_df.where(compile_matchers(ms)).collect()}
     assert got == {"up", "down"}
+
+
+# -- __name__ regex literal prefix -------------------------------------------
+# atoms that are literal, metacharacters, escapes, classes or groups, each
+# optionally quantified, and bare anchors; joined, and sometimes split by a
+# top-level '|'
+_atom = st.sampled_from(
+    ["a", "b", "_", "=", ".", "\\.", "\\d", "[ab]", "[^a]", "(ab)", "(?:a|b)",
+     "(?i:a)", "^", "$"]
+)
+_quant = st.sampled_from(["", "", "", "*", "+", "?", "{2}", "{0,2}", "*?", "+?", "??"])
+_piece = st.builds(lambda a, q: a if a in "^$" else a + q, _atom, _quant)
+_body = st.lists(_piece, max_size=6).map("".join)
+_pattern = st.one_of(_body, st.builds(lambda x, y: f"{x}|{y}", _body, _body))
+
+
+@settings(max_examples=300, deadline=None, suppress_health_check=list(HealthCheck))
+@given(pattern=_pattern, data=st.data())
+def test_literal_prefix_starts_every_match(pattern, data):
+    """Soundness of the pushed ``startswith``: whenever the reference's
+    concat-anchored regex matches a string, that string starts with the
+    extracted prefix (so ANDing it in never drops a matching row)."""
+    try:
+        anchored = pyre.compile("^" + pattern + "$")
+    except pyre.error:  # e.g. a quantified anchor, '^*'
+        assume(False)
+    s = data.draw(st.from_regex(anchored), label="matched")
+    assert anchored.search(s)
+    assert s.startswith(literal_prefix(pattern)), (pattern, s)
+
+
+def test_literal_prefix_cases():
+    assert literal_prefix("go_.*") == "go_"
+    assert literal_prefix("up") == "up"
+    assert literal_prefix("ab+") == "ab"  # at least one b
+    assert literal_prefix("ab*") == "a"  # b may be absent
+    assert literal_prefix("ab?c") == "a"
+    assert literal_prefix("ab{0,2}") == "a"
+    assert literal_prefix("go_|up") == ""  # '^go_|up$' matches "xup"
+    assert literal_prefix("(?i)go") == ""
+    assert literal_prefix("\\.go") == ""
+    assert literal_prefix("[g]o") == ""

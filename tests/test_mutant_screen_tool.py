@@ -433,12 +433,15 @@ def test_screen_help_prints_usage_not_refusal(tmp_path, monkeypatch, capsys):
 
 def test_every_mutant_original_snippet_canonical_at_head():
     """VERDICT r15 task 2, second leg: pin the canonical spelling of every
-    mutant's ORIGINAL snippet in COMMITTED source — ``git show
-    HEAD:<path>`` must contain each rule's ``old`` string exactly once.
+    mutant's ORIGINAL snippet in the source git commits — the index blob
+    ``git show :<path>`` must contain each rule's ``old`` string exactly
+    once.  The index is what the next commit records and equals HEAD on a
+    clean checkout, so a change that adds code together with its mutant
+    rule is checked before it is committed, not only after.
     The r15 snapshot shipped mutant M60 at HEAD for a full round because
     nothing checked committed state (the working tree was correct, so
     pytest stayed green).  This test fails loudly and cheaply on any
-    future committed mutant, independent of working-tree state."""
+    future committed or staged mutant, independent of working-tree state."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
         "mutant_screen_head_check",
@@ -455,16 +458,16 @@ def test_every_mutant_original_snippet_canonical_at_head():
     problems: list[str] = []
     for mid, desc, path, old, new, _killers in mod.MUTANTS:
         if path not in blobs:
-            r = subprocess.run(["git", "show", f"HEAD:{path}"], cwd=repo,
+            r = subprocess.run(["git", "show", f":{path}"], cwd=repo,
                                capture_output=True, text=True)
-            assert r.returncode == 0, f"{path} missing at HEAD"
+            assert r.returncode == 0, f"{path} missing from the index"
             blobs[path] = r.stdout
         n_old = blobs[path].count(old)
         if n_old != 1:
             state = ("MUTANT COMMITTED" if blobs[path].count(new) > 0
                      else "snippet drifted")
             problems.append(f"{mid} ({desc}): old-count={n_old} in "
-                            f"HEAD:{path} [{state}]")
+                            f"index:{path} [{state}]")
     assert not problems, (
-        "mutant original snippets not canonical at HEAD — a committed "
-        "mutant or a stale screen rule:\n" + "\n".join(problems))
+        "mutant original snippets not canonical in the index — a committed "
+        "or staged mutant, or a stale screen rule:\n" + "\n".join(problems))

@@ -39,6 +39,16 @@ def test_resolutions_listed(stores):
     assert rs.resolutions() == [60, 3600]
 
 
+def test_rollup_files_sorted(stores, unsorted_store_files):
+    """Rollup builds write through the base store's sorted-partition
+    writer: each file is physically in (metric_name, labels, ts) order,
+    whether built from raw rows or from a finer rollup."""
+    base, rs = stores
+    assert unsorted_store_files(base.path) == []
+    for r in rs.resolutions():
+        assert unsorted_store_files(rs._res_path(r)) == [], r
+
+
 def test_routing(stores):
     _, rs = stores
     # raw query -> base (no rollup)

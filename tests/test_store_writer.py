@@ -3,7 +3,7 @@ compaction, partition layout."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
@@ -151,8 +151,9 @@ def test_read_plan_prunes_partitions(spark, tmp_path):
 
 def test_read_plan_pushes_name_filter(spark, tmp_path):
     """F3 metric-name equality must reach the parquet scan as a pushed
-    filter (the MergeTree primary-key-prefix analog: row-group stats on the
-    file-internal (metric_name, labels, ts) sort order prune by name)."""
+    filter (the MergeTree primary-key-prefix analog: the page column index
+    on the file-internal (metric_name, labels, ts) sort order skips pages
+    by name)."""
     from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
     from remote_tsdb_clickhouse_spark.plans.read_plan import ReadQuery, read_query_grouped
 
@@ -170,6 +171,72 @@ def test_read_plan_pushes_name_filter(spark, tmp_path):
     # (the plan string elides long filter lists; match prefixes)
     assert "EqualTo(met" in pushed
     assert "GreaterThanOrEqual(ts," in pushed
+
+
+def test_read_plan_pushes_name_regex_prefix(spark, tmp_path):
+    """F5 on a regex with a literal prefix also reaches the scan as a
+    pushed StringStartsWith (rlike itself cannot be pushed), and the
+    result is unchanged."""
+    from remote_tsdb_clickhouse_spark.plans.matchers import LabelMatcher, MatcherType
+    from remote_tsdb_clickhouse_spark.plans.read_plan import ReadQuery, read_query_grouped
+
+    store = make_store(spark, tmp_path)
+    writer = TimeseriesWriter(store)
+    writer.write(wr("go_goroutines", [], [(1.0, 1704067200000)]))
+    writer.write(wr("gone", [], [(2.0, 1704067200000)]))
+    q = ReadQuery(
+        start_ms=1704067200000,
+        matchers=(LabelMatcher(MatcherType.RE, "__name__", "go_.*"),),
+    )
+    df = read_query_grouped(store.read(), q)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pushed = plan.split("PushedFilters: [")[1].split("]")[0]
+    assert "StringStart" in pushed
+    assert [r["metric_name"] for r in df.collect()] == ["go_goroutines"]
+
+
+def _shuffled_samples(spark, seed: int):
+    """Rows over two days, several names and labelsets, in random order."""
+    import random
+
+    from remote_tsdb_clickhouse_spark.model import SAMPLES_SCHEMA
+
+    base = datetime(2024, 1, 1, 22)
+    rows = [
+        (
+            base + timedelta(seconds=15 * i + seed),
+            f"m{s % 5}",
+            [f"instance=i{s}", f"job=j{s % 3}"],
+            float(i),
+        )
+        for s in range(40)
+        for i in range(600)  # 2.5 h: crosses midnight
+    ]
+    random.Random(seed).shuffle(rows)
+    return spark.createDataFrame(rows, SAMPLES_SCHEMA).repartition(3)
+
+
+def test_store_files_sorted_after_every_write(spark, tmp_path, unsorted_store_files):
+    """Every write path must leave each file physically sorted by
+    (metric_name, labels, ts): the page skipping behind a pushed name
+    filter depends on it.  A sort that does not lead with the partition
+    column is silently replaced by Spark's own sort on ts_date alone."""
+    store = make_store(spark, tmp_path)
+    root = str(tmp_path / "samples")
+    store.append(_shuffled_samples(spark, 1))
+    store.append(_shuffled_samples(spark, 2))
+    assert sorted(p.name for p in (tmp_path / "samples").iterdir() if p.is_dir()) == [
+        "ts_date=2024-01-01",
+        "ts_date=2024-01-02",
+    ]
+    assert unsorted_store_files(root) == []
+    # survivors of both days are read back from several files and rewritten
+    store.delete_time_range(datetime(2024, 1, 1, 23), datetime(2024, 1, 2, 0, 10))
+    assert unsorted_store_files(root) == []
+    store.compact(files_per_partition=1)
+    assert unsorted_store_files(root) == []
+    # 280 of each series' 600 samples per batch fall in (23:00, 00:10]
+    assert store.read().count() == 2 * 40 * (600 - 280)
 
 
 def test_tsv_export_roundtrip(spark, tmp_path):

@@ -19,8 +19,9 @@ original source back); run from anywhere, exits 0 iff all mutants die.
 Snapshot-mid-run hardening (r16, after the M60 incident — VERDICT r15):
 the screen refuses to start if any mutation target file is dirty vs
 HEAD, and ``tests/test_mutant_screen_tool.py`` pins every mutant's
-ORIGINAL snippet to appear exactly once in ``git show HEAD:<path>`` so
-a committed mutant fails the suite loudly and cheaply.  Builder habit
+ORIGINAL snippet to appear exactly once in ``git show :<path>`` (the
+index: what the next commit records, HEAD on a clean checkout) so a
+committed or staged mutant fails the suite loudly and cheaply.  Builder habit
 (run docs): do NOT start a screen pass in the last ~30 min of a
 session's budget — the per-mutant pytest subprocess is an exposure
 window during which an external snapshot commit captures a live mutant.
@@ -80,10 +81,14 @@ committed tree (after the refuse-on-unreadable-git tightening):
 104/104 KILLED, zero INVALID/TIMEOUT, baseline green.  r20 re-ran the
 full register in one pass on the committed tree (after the _R20_WINDOW
 hoist flip and the pregate oracle-validation/stop fixes): 104/104
-KILLED, zero INVALID/TIMEOUT, baseline green.  The screen earned its
-keep on first contact, surviving six times before the gaps were closed
-(plus one killer-list correction: M50's CH-leg trunc test lives in
-test_read_plan.py, not the sink file):
+KILLED, zero INVALID/TIMEOUT, baseline green.  Batch 19 (M105-M106):
+the store's physical sort order, whose sort keys must lead with the
+partition column or Spark's partitioned writer re-sorts by ts_date
+alone (killed by pyarrow reads of every written file), and the
+alternation guard of the ``__name__`` regex literal prefix — both
+KILLED.  The screen earned its keep on first contact, surviving six
+times before the gaps were closed (plus one killer-list correction:
+M50's CH-leg trunc test lives in test_read_plan.py, not the sink file):
 
 - M20 (decontamination 13->12) survived the unit suite — the randomized
   sweep passes n=5 explicitly, so only the driver's oracle row saw the
@@ -728,6 +733,17 @@ MUTANTS = [
      'F.sum(F.when(F.col("hv") < 10, 1).otherwise(0))',
      'F.sum(F.when(F.col("hv") <= 10, 1).otherwise(0))',
      ["tests/test_entry_clauses.py"]),
+    # -- batch 19: store file order and the __name__ regex prefix ----------
+    ("M105", "store sort keys lose the leading ts_date (files come out unsorted)",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     'SORT_KEYS = (PARTITION_COLUMN, "metric_name", "labels", "ts")',
+     'SORT_KEYS = ("metric_name", "labels", "ts")',
+     ["tests/test_store_writer.py"]),
+    ("M106", "regex literal prefix ignores top-level alternation",
+     MA,
+     '    if "|" in pattern:',
+     '    if False:',
+     ["tests/test_matcher_properties.py"]),
 ]
 
 
