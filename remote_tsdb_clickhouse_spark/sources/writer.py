@@ -8,31 +8,52 @@ truncated to DateTime seconds (``write.go:49``); one atomic batch per
 request (``write.go:14-22,60``).
 
 Here the flatten runs driver-side over the decoded request (requests are
-bounded — 32 MiB wire cap — so this is not a scale risk), producing one
-Arrow-backed DataFrame appended atomically via the parquet commit protocol.
-The ingest *volume* path is Structured Streaming over many requests
-(``streaming/ingest.py``), where the same row shape arrives via staged
-batches.
+bounded — 32 MiB wire cap — so this is not a scale risk) into a
+``pyarrow.Table``, so the request becomes one Arrow-backed DataFrame with no
+per-row pickling on either side of py4j.  The frame is coalesced to one
+partition before the append: one task, one file per date partition per
+request, like one part per INSERT.  The append is atomic via the parquet
+commit protocol.  The ingest *volume* path is Structured Streaming over many
+requests (``streaming/ingest.py``), where the same row shape arrives via
+staged batches.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from remote_tsdb_clickhouse_spark import prompb
 from remote_tsdb_clickhouse_spark.model import NAME_LABEL, SAMPLES_SCHEMA
 from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 
+#: Arrow schema of the flatten; Spark reads ``ts`` as its UTC TimestampType.
+ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("ts", pa.timestamp("s", tz="UTC"), nullable=False),
+        pa.field("metric_name", pa.string(), nullable=False),
+        pa.field("labels", pa.list_(pa.string()), nullable=False),
+        pa.field("value", pa.float64(), nullable=False),
+    ]
+)
 
-def write_request_rows(req: prompb.WriteRequest) -> list[tuple]:
-    """Flatten a WriteRequest into canonical-schema row tuples.
+#: Epoch seconds of 0001-01-01T00:00:00Z and 9999-12-31T23:59:59Z, the
+#: range of Python's ``datetime`` that bounds every stored ``ts``.
+MIN_TS_S = -62_135_596_800
+MAX_TS_S = 253_402_300_799
 
-    Returns ``(ts, metric_name, labels, value)`` tuples; ms -> seconds
+
+def write_request_rows(req: prompb.WriteRequest) -> pa.Table:
+    """Flatten a WriteRequest into a canonical-schema Arrow table.
+
+    One row ``(ts, metric_name, labels, value)`` per sample; ms -> seconds
     truncation and ``__name__`` extraction per the reference semantics.
+    Raises ``ValueError`` if a sample's second falls outside years 1-9999.
     """
-    rows: list[tuple] = []
+    secs: list[int] = []
+    names: list[str] = []
+    label_col: list[list[str]] = []
+    values: list[float] = []
     for ts_msg in req.timeseries:
         name = ""
         labels: list[str] = []
@@ -41,12 +62,17 @@ def write_request_rows(req: prompb.WriteRequest) -> list[tuple]:
                 name = lb.value
                 continue
             labels.append(f"{lb.name}={lb.value}")
+        n = len(ts_msg.samples)
+        names += [name] * n
+        label_col += [labels] * n
         for s in ts_msg.samples:
-            # ms -> whole seconds (DateTime parity, write.go:49); tz-naive
-            # UTC to match the engine's UTC session zone
-            ts = datetime.fromtimestamp(s.timestamp // 1000, tz=timezone.utc).replace(tzinfo=None)
-            rows.append((ts, name, labels, float(s.value)))
-    return rows
+            # ms -> whole seconds (DateTime parity, write.go:49), floored
+            secs.append(s.timestamp // 1000)
+            values.append(float(s.value))
+    if secs and (min(secs) < MIN_TS_S or max(secs) > MAX_TS_S):
+        bad = next(t for t in secs if not MIN_TS_S <= t <= MAX_TS_S)
+        raise ValueError(f"sample second {bad} is out of range (years 1-9999)")
+    return pa.table([secs, names, label_col, values], schema=ARROW_SCHEMA)
 
 
 def write_request_df(spark: SparkSession, req: prompb.WriteRequest) -> DataFrame:
@@ -61,9 +87,9 @@ class TimeseriesWriter:
         self.store = store
 
     def write(self, req: prompb.WriteRequest) -> int:
-        rows = write_request_rows(req)
-        if not rows:
+        table = write_request_rows(req)
+        if not len(table):
             return 0
-        df = self.store.spark.createDataFrame(rows, SAMPLES_SCHEMA)
+        df = self.store.spark.createDataFrame(table, SAMPLES_SCHEMA).coalesce(1)
         self.store.append(df)
-        return len(rows)
+        return len(table)

@@ -107,6 +107,57 @@ def test_write_error_counted(server):
     assert app.metrics.write_errors_total.value == 1
 
 
+def _write_body(*samples):
+    return codec.encode_write_request(
+        prompb.WriteRequest(
+            timeseries=[
+                prompb.TimeSeries(
+                    labels=[prompb.Label("__name__", "up")],
+                    samples=[prompb.Sample(v, t) for v, t in samples],
+                )
+            ]
+        )
+    )
+
+
+def test_out_of_range_timestamp_rejected(server):
+    """A sample whose second falls outside years 1-9999 fails its whole
+    request with a 500 and an error count; nothing of it is stored."""
+    srv, app = server
+    assert _post(srv.port, "/write", _write_body((1.0, 1704067200000)))[0] == 200
+
+    def stored():
+        return sorted(tuple(r) for r in app.samples_provider().collect())
+
+    before = stored()
+    # the last two (year 10000, year 0) pass Arrow's own range checks
+    for bad_ms in (2**62, -(2**62), 253402300800000, -62135596801000):
+        errors = app.metrics.write_errors_total.value
+        status, body = _post(srv.port, "/write", _write_body((2.0, 1704067215000), (3.0, bad_ms)))
+        assert status == 500, bad_ms
+        assert b"out of range" in body
+        assert app.metrics.write_errors_total.value == errors + 1
+        assert app.metrics.samples_written_total.value == 1
+        assert stored() == before
+
+
+def test_negative_ms_floors_to_previous_second(server, tmp_path):
+    """ms -> s floors: -1 ms is 1969-12-31 23:59:59 in that day's partition."""
+    from datetime import date, datetime
+
+    srv, app = server
+    assert _post(srv.port, "/write", _write_body((5.0, -1)))[0] == 200
+    [row] = app.samples_provider().collect()
+    assert (row.ts, row.ts_date, row.value) == (
+        datetime(1969, 12, 31, 23, 59, 59),
+        date(1969, 12, 31),
+        5.0,
+    )
+    assert [p.name for p in (tmp_path / "samples").iterdir() if p.is_dir()] == [
+        "ts_date=1969-12-31"
+    ]
+
+
 def test_canceled_read_not_counted_as_error(spark, tmp_path):
     """context.Canceled parity (main.go:147-152): a client that disconnects
     mid-query is swallowed — no read-error increment, no 500."""

@@ -3,13 +3,26 @@ compaction, partition layout."""
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+import glob
+import os
+import struct
+from collections import Counter
+from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark import prompb
 from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
-from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter, write_request_rows
+from remote_tsdb_clickhouse_spark.sources.writer import (
+    ARROW_SCHEMA,
+    MAX_TS_S,
+    MIN_TS_S,
+    TimeseriesWriter,
+    write_request_rows,
+)
 
 
 def make_store(spark, tmp_path) -> SamplesStore:
@@ -34,15 +47,34 @@ def test_write_request_flatten_semantics():
         [("instance", "10.0.0.1:9100"), ("job", "omada")],
         [(35.5, 1704067200123)],  # ms with sub-second junk
     )
-    rows = write_request_rows(req)
+    table = write_request_rows(req)
+    assert table.schema == ARROW_SCHEMA
+    rows = table.to_pylist()
     assert rows == [
-        (
-            datetime(2024, 1, 1, 0, 0, 0),  # truncated to the second
-            "go_goroutines",
-            ["instance=10.0.0.1:9100", "job=omada"],
-            35.5,
-        )
+        {
+            "ts": datetime(2024, 1, 1, 0, 0, 0, tzinfo=timezone.utc),  # truncated to the second
+            "metric_name": "go_goroutines",
+            "labels": ["instance=10.0.0.1:9100", "job=omada"],
+            "value": 35.5,
+        }
     ]
+    assert rows[0]["ts"].utcoffset() == timedelta(0)
+
+
+def test_write_request_flatten_timestamp_bounds():
+    """The flatten accepts exactly the seconds of years 1-9999 (the range
+    of a Python ``datetime``) and floors negative milliseconds."""
+
+    def secs(ms):
+        return [r["ts"] for r in write_request_rows(wr("m", [], [(1.0, ms)])).to_pylist()]
+
+    utc = timezone.utc
+    assert secs(MIN_TS_S * 1000) == [datetime(1, 1, 1, tzinfo=utc)]
+    assert secs(MAX_TS_S * 1000 + 999) == [datetime(9999, 12, 31, 23, 59, 59, tzinfo=utc)]
+    assert secs(-1) == [datetime(1969, 12, 31, 23, 59, 59, tzinfo=utc)]
+    for ms in (MIN_TS_S * 1000 - 1, (MAX_TS_S + 1) * 1000, 2**62, -(2**62)):
+        with pytest.raises(ValueError, match="out of range"):
+            write_request_rows(wr("m", [], [(1.0, 1704067200000), (2.0, ms)]))
 
 
 def test_store_roundtrip_and_partitioning(spark, tmp_path):
@@ -57,6 +89,102 @@ def test_store_roundtrip_and_partitioning(spark, tmp_path):
     # physical layout: one directory per date partition
     dirs = sorted(p.name for p in (tmp_path / "samples").iterdir() if p.is_dir())
     assert dirs == ["ts_date=2024-01-01", "ts_date=2024-01-02"]
+
+
+def test_one_file_per_date_partition_per_request(spark, tmp_path):
+    """A /write lands like one ClickHouse INSERT makes one part per
+    partition: one parquet file per date partition, whatever the session's
+    parallelism."""
+    day = 1704067200000  # 2024-01-01 00:00 UTC
+
+    def files_per_day(root, samples):
+        n = TimeseriesWriter(SamplesStore(spark, str(root))).write(wr("m", [("job", "a")], samples))
+        assert n == len(samples)
+        return Counter(os.path.basename(os.path.dirname(f)) for f in glob.glob(f"{root}/*/*.parquet"))
+
+    one_day = [(float(i), day + i * 15_000) for i in range(64)]
+    assert files_per_day(tmp_path / "one", one_day) == {"ts_date=2024-01-01": 1}
+    # rows of the two days interleaved, so every input slice holds both
+    two_days = [(float(i), day + (i % 2) * 86_400_000 + i * 15_000) for i in range(64)]
+    assert files_per_day(tmp_path / "two", two_days) == {
+        "ts_date=2024-01-01": 1,
+        "ts_date=2024-01-02": 1,
+    }
+
+
+def _bits(v: float) -> str:
+    return struct.pack(">d", v).hex()
+
+
+def _from_bits(h: str) -> float:
+    return struct.unpack(">d", bytes.fromhex(h))[0]
+
+
+def test_written_rows_bit_parity(spark, tmp_path):
+    """An adversarial request is stored with exactly the expected rows,
+    read back from the parquet files with pyarrow and with ``value``
+    compared as its 64-bit pattern.  Pinned current behaviour: Spark's
+    UnsafeRow canonicalizes every NaN, so the Prometheus staleness marker
+    0x7ff0000000000002 is stored as 0x7ff8000000000000."""
+    day = 1704067200000  # 2024-01-01 00:00 UTC
+    stale = "7ff0000000000002"
+    req = prompb.WriteRequest(
+        timeseries=[
+            prompb.TimeSeries(
+                labels=[
+                    prompb.Label("__name__", "http_requests_total"),
+                    prompb.Label("job", "api=v2"),
+                    prompb.Label("path", "/naïve/ü"),
+                ],
+                # newest first; two samples in one second
+                samples=[
+                    prompb.Sample(1.0, day + 30_999),
+                    prompb.Sample(-0.0, day + 30_000),
+                    prompb.Sample(float("inf"), day + 15_500),
+                    prompb.Sample(float("-inf"), day),
+                    prompb.Sample(float("nan"), day - 1),
+                ],
+            ),
+            prompb.TimeSeries(
+                labels=[prompb.Label("instance", "h:9100")],  # no __name__
+                samples=[prompb.Sample(_from_bits(stale), day + 60_000)],
+            ),
+            prompb.TimeSeries(labels=[prompb.Label("__name__", "empty")], samples=[]),
+        ]
+    )
+    # the flatten itself keeps every bit
+    assert [_bits(v) for v in write_request_rows(req).column("value").to_pylist()] == [
+        "3ff0000000000000", "8000000000000000", "7ff0000000000000",
+        "fff0000000000000", "7ff8000000000000", stale,
+    ]
+    root = tmp_path / "samples"
+    assert TimeseriesWriter(SamplesStore(spark, str(root))).write(req) == 6
+
+    got = []
+    for f in glob.glob(f"{root}/*/*.parquet"):
+        t = pq.read_table(f)
+        got += [
+            (os.path.basename(os.path.dirname(f)), ns, name, labels, _bits(v))
+            for ns, name, labels, v in zip(
+                t["ts"].cast(pa.int64()).to_pylist(),
+                t["metric_name"].to_pylist(),
+                t["labels"].to_pylist(),
+                t["value"].to_pylist(),
+            )
+        ]
+    d1, s1 = "ts_date=2024-01-01", 1704067200 * 10**9
+    lbl = ["job=api=v2", "path=/naïve/ü"]
+    second = 10**9
+    assert sorted(got) == sorted(
+        [
+            (d1, s1 + 30 * second, "http_requests_total", lbl, "3ff0000000000000"),
+            (d1, s1 + 30 * second, "http_requests_total", lbl, "8000000000000000"),
+            (d1, s1 + 15 * second, "http_requests_total", lbl, "7ff0000000000000"),
+            (d1, s1, "http_requests_total", lbl, "fff0000000000000"),
+            ("ts_date=2023-12-31", s1 - second, "http_requests_total", lbl, "7ff8000000000000"),
+            (d1, s1 + 60 * second, "", ["instance=h:9100"], "7ff8000000000000"),
+        ]
+    )
 
 
 def test_range_delete(spark, tmp_path):

@@ -86,7 +86,10 @@ the store's physical sort order, whose sort keys must lead with the
 partition column or Spark's partitioned writer re-sorts by ts_date
 alone (killed by pyarrow reads of every written file), and the
 alternation guard of the ``__name__`` regex literal prefix — both
-KILLED.  The screen earned its keep on first contact, surviving six
+KILLED.  Batch 20 (M107-M108): the ``/write`` frame's ``coalesce(1)``
+(one file per date partition per request) and the flatten's
+years-1-9999 timestamp bounds check — both KILLED.  The screen earned
+its keep on first contact, surviving six
 times before the gaps were closed (plus one killer-list correction:
 M50's CH-leg trunc test lives in test_read_plan.py, not the sink file):
 
@@ -744,6 +747,17 @@ MUTANTS = [
      '    if "|" in pattern:',
      '    if False:',
      ["tests/test_matcher_properties.py"]),
+    # -- batch 20: the Arrow-backed /write frame -----------------------------
+    ("M107", "/write frame not coalesced (one file per input slice, not per request)",
+     WR,
+     "createDataFrame(table, SAMPLES_SCHEMA).coalesce(1)",
+     "createDataFrame(table, SAMPLES_SCHEMA)",
+     ["tests/test_store_writer.py"]),
+    ("M108", "/write timestamp bounds check dropped (years 1-9999 accepted past)",
+     WR,
+     "if secs and (min(secs) < MIN_TS_S or max(secs) > MAX_TS_S):",
+     "if False:",
+     ["tests/test_server.py"]),
 ]
 
 
