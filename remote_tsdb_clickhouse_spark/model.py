@@ -29,6 +29,7 @@ Spark's partitioned writer replaces it (``sources.samples_store``).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 #: Prometheus reserved label carrying the metric name.
@@ -50,6 +51,18 @@ SAMPLES_SCHEMA = T.StructType(
 )
 
 SAMPLES_FIELDS = ["ts", "metric_name", "labels", "value"]
+
+#: The same schema as Arrow, field for field as Spark writes it to parquet:
+#: every column required, ``labels`` a list with a required ``element``.
+#: ``ts`` is whole seconds, so years 1-9999 fit without overflow.
+ARROW_SAMPLES_SCHEMA = pa.schema(
+    [
+        pa.field("ts", pa.timestamp("s", tz="UTC"), nullable=False),
+        pa.field("metric_name", pa.string(), nullable=False),
+        pa.field("labels", pa.list_(pa.field("element", pa.string(), nullable=False)), nullable=False),
+        pa.field("value", pa.float64(), nullable=False),
+    ]
+)
 
 #: Partition column used by the parquet samples store (date(ts)); gives
 #: partition pruning for the time-range predicates F1/F2 at 100 TB scale.

@@ -101,9 +101,10 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 
 def _store_exists(spark, path: str) -> bool:
-    """Probe the store path through the Hadoop FileSystem API so non-local
-    URIs (s3a://, hdfs://) that Spark can serve are accepted — a plain
-    ``os.path.isdir`` would spuriously reject them."""
+    """Probe the store path through the Hadoop FileSystem API, the one
+    Spark scans it with.  Only roots that pyarrow can open too get here:
+    ``/write`` lands through pyarrow, and ``build_server`` checks that
+    first, so ``s3a://`` is refused there (pyarrow has no such scheme)."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -164,9 +165,13 @@ def build_server(args: argparse.Namespace, spark=None, http=None):
         from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter
 
         store = SamplesStore(spark, args.store)
-        # fail-fast storage check, the db.Ping() analog: an unreadable or
-        # absent table is a config error surfaced at startup, not on the
-        # first request
+        # fail-fast storage checks, the db.Ping() analog: a root pyarrow
+        # cannot open (/write lands through it) or an absent table is a
+        # config error surfaced at startup, not on the first request
+        try:
+            store.landing()
+        except (OSError, ValueError) as e:
+            raise SystemExit(f"store path {args.store!r} cannot be opened for writes: {e}") from e
         if not args.create_if_missing and not _store_exists(spark, args.store):
             raise SystemExit(
                 f"store path {args.store!r} does not exist (use --create-if-missing)"

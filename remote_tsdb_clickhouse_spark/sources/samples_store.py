@@ -7,9 +7,18 @@ The reference's storage is one ClickHouse MergeTree table ordered by
 - **Parquet, partitioned by** ``ts_date=date(ts)`` — partition pruning
   serves the time-range predicates F1/F2 exactly where MergeTree's primary
   key prunes granules by time.
+- **Two writers, one file format.**  Rows that already sit on the driver
+  as a ``pyarrow.Table`` (one ``/write``) are landed by ``append`` itself
+  with pyarrow, with no Spark job: one sorted file per date partition, in
+  the format Spark writes (INT96 ``ts``, snappy, dictionary-encoded
+  ``ts``/``metric_name``/``labels``, plain ``value``, page index, no
+  ``ARROW:schema`` blob).  DataFrames (streaming batches, ``import_tsv``,
+  ``compact``, ``delete_time_range``) go through
+  :func:`write_sorted_partitions`.
 - **Sorted within files by** ``(metric_name, labels, ts)``: every write
-  goes through :func:`write_sorted_partitions`, which sorts by
-  ``(ts_date, metric_name, labels, ts)``.  A partitioned write needs its
+  sorts by ``SORT_KEYS = (ts_date, metric_name, labels, ts)``; the Arrow
+  landing reproduces Spark's ``array<string>`` order exactly
+  (:func:`labels_sort_key`).  A partitioned Spark write needs its
   rows ordered by the partition column; when the requested sort does not
   start with it, Spark replaces that sort with one on ``ts_date`` alone and
   the files come out unsorted.  With the partition column leading, the
@@ -21,9 +30,13 @@ The reference's storage is one ClickHouse MergeTree table ordered by
   are physically adjacent too (cheap grouping).  Stores written before the
   partition column led the sort stay unsorted until one :meth:`compact`
   rewrites them.
-- **Append-atomicity**: each ``append()`` lands via parquet's committed-file
-  protocol — readers never see partial batches, the analog of the
-  reference's per-request transaction (``write.go:14-22,60``).
+- **Append-atomicity**: a DataFrame ``append()`` lands via parquet's
+  committed-file protocol; an Arrow ``append()`` writes every file under a
+  dot-prefixed temporary name (skipped by every reader) and renames them
+  into place only once all are written, so a failed write publishes
+  nothing and no reader sees a partial file — the analog of the
+  reference's per-request transaction (``write.go:14-22,60``).  A request
+  spanning two days publishes by two renames.
 - **Range delete (S8)**: the reference uses ``ALTER TABLE ... DELETE WHERE
   updated_at > a AND updated_at <= b`` for day reimports
   (``README.md:163-167``); here it is a partition-scoped rewrite using
@@ -40,10 +53,20 @@ The reference's storage is one ClickHouse MergeTree table ordered by
 
 from __future__ import annotations
 
+import os
+import threading
+import uuid
+from urllib.parse import urlparse
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark.model import (
+    ARROW_SAMPLES_SCHEMA,
     PARTITION_COLUMN,
     PARTITIONED_SAMPLES_SCHEMA,
     SAMPLES_FIELDS,
@@ -69,10 +92,32 @@ def write_sorted_partitions(df: DataFrame, path: str, mode: str, dynamic: bool =
     w.mode(mode).parquet(path)
 
 
+def labels_sort_key(labels: pa.ChunkedArray) -> pa.Array:
+    """One string per ``labels`` list whose byte order is Spark's
+    ``array<string>`` order: element by element in UTF-8 byte order, a
+    shorter prefix first.
+
+    Each element ends in ``\\x00\\x01`` and a ``\\x00`` inside an element
+    becomes ``\\x00\\x02``, so an element that ends sorts before every
+    longer one sharing its bytes, and no element can fake a boundary.
+    A plain separator-joined key misorders ``["a", "b"]`` and
+    ``["a\\x00b"]`` when the separator is ``\\x00``.
+    """
+    lists = labels.combine_chunks()
+    elements = pc.binary_join_element_wise(
+        pc.replace_substring(lists.values, "\x00", "\x00\x02"), "", "\x00\x01"
+    )
+    return pc.binary_join(pa.ListArray.from_arrays(lists.offsets, elements), "")
+
+
 class SamplesStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
-        self.path = path
+        # Spark and the Arrow landing must agree on one root: a scheme-less
+        # path is made absolute here, where pyarrow would reject it as a URI
+        # and Spark would resolve it against the JVM's working directory
+        self.path = path if urlparse(path).scheme else os.path.abspath(path)
+        self._landing: tuple[pafs.FileSystem, str] | None = None
         # concurrent appends to one parquet root race on the shared
         # `_temporary` commit-staging dir (one job's cleanup deletes the
         # other's in-flight task files -> silently lost rows; observed under
@@ -82,24 +127,90 @@ class SamplesStore:
         # through the streaming ingest, whose micro-batches serialize anyway.
         # A cluster-grade multi-writer store swaps this for a table format
         # with a transactional commit protocol (Delta/Iceberg).
-        import threading
-
         self._append_lock = threading.Lock()
 
     # -- write path ---------------------------------------------------------
 
-    def append(self, df: DataFrame) -> None:
+    def append(self, rows: DataFrame | pa.Table) -> None:
         """Append canonical-schema rows (one micro-batch / one request).
 
-        Every file gets the MergeTree-like physical order; partitionBy(date)
-        keeps time pruning.
+        A DataFrame goes through Spark's partitioned writer; a
+        ``pyarrow.Table`` in ``ARROW_SAMPLES_SCHEMA`` (rows already on the
+        driver, e.g. one ``/write``) is landed by :meth:`_land` with no
+        Spark job.  Either way every file
+        gets the MergeTree-like physical order and sits in its date
+        partition.
         """
         with self._append_lock:
+            if isinstance(rows, pa.Table):
+                self._land(rows)
+                return
             write_sorted_partitions(
-                df.select(*SAMPLES_FIELDS).withColumn(PARTITION_COLUMN, F.to_date("ts")),
+                rows.select(*SAMPLES_FIELDS).withColumn(PARTITION_COLUMN, F.to_date("ts")),
                 self.path,
                 "append",
             )
+
+    def landing(self) -> tuple[pafs.FileSystem, str]:
+        """The pyarrow filesystem and root that Arrow appends land under
+        (resolved once).  Raises ``ValueError``/``OSError`` when pyarrow
+        cannot open the path, e.g. an ``s3a://`` URI."""
+        if self._landing is None:
+            self._landing = pafs.FileSystem.from_uri(self.path)
+        return self._landing
+
+    def _land(self, table: pa.Table) -> None:
+        """Write ``table`` as one parquet file per date partition, in
+        Spark's own file format, sorted by ``SORT_KEYS``.
+
+        Every file is written under a dot-prefixed temporary name (which
+        Spark's file listing and the store's readers skip) before any is
+        renamed into place, so a failed write publishes nothing.  The files
+        carry no Spark key-value metadata (pyarrow writes none without the
+        ``ARROW:schema`` blob), so Spark reads their INT96 ``ts`` under
+        ``spark.sql.parquet.int96RebaseModeInRead``, ``CORRECTED`` by
+        default: no calendar rebase.  Called under the append lock.
+        """
+        if table.schema != ARROW_SAMPLES_SCHEMA:
+            raise ValueError(f"expected {ARROW_SAMPLES_SCHEMA}, got {table.schema}")
+        fs, root = self.landing()
+        days = pc.cast(table.column("ts"), pa.date32())
+        labels_key = labels_sort_key(table.column("labels"))
+        keys = pa.table(
+            [days, table.column("metric_name"), labels_key, table.column("ts")], names=SORT_KEYS
+        )
+        order = pc.sort_indices(keys, [(k, "ascending") for k in SORT_KEYS])
+        table, days = table.take(order), days.take(order)
+        staged = []
+        try:
+            start = 0
+            for run in pc.value_counts(days).to_pylist():
+                day, n = run["values"], run["counts"]
+                part_dir = f"{root}/{PARTITION_COLUMN}={day.isoformat()}"
+                name = f"part-{uuid.uuid4()}.c000.snappy.parquet"
+                tmp, final = f"{part_dir}/.{name}.tmp", f"{part_dir}/{name}"
+                fs.create_dir(part_dir, recursive=True)
+                staged.append((tmp, final))
+                pq.write_table(
+                    table.slice(start, n),
+                    tmp,
+                    filesystem=fs,
+                    compression="snappy",
+                    use_dictionary=["ts", "metric_name", "labels.list.element"],
+                    use_deprecated_int96_timestamps=True,
+                    write_page_index=True,
+                    store_schema=False,
+                )
+                start += n
+        except BaseException:
+            for tmp, _ in staged:
+                try:
+                    fs.delete_file(tmp)
+                except OSError:
+                    pass
+            raise
+        for tmp, final in staged:
+            fs.move(tmp, final)
 
     # -- read path ----------------------------------------------------------
 

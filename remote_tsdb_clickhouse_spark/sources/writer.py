@@ -9,13 +9,13 @@ request (``write.go:14-22,60``).
 
 Here the flatten runs driver-side over the decoded request (requests are
 bounded — 32 MiB wire cap — so this is not a scale risk) into a
-``pyarrow.Table``, so the request becomes one Arrow-backed DataFrame with no
-per-row pickling on either side of py4j.  The frame is coalesced to one
-partition before the append: one task, one file per date partition per
-request, like one part per INSERT.  The append is atomic via the parquet
-commit protocol.  The ingest *volume* path is Structured Streaming over many
-requests (``streaming/ingest.py``), where the same row shape arrives via
-staged batches.
+``pyarrow.Table`` in the store's landing schema, and the store lands that
+table itself (``SamplesStore.append``): sorted, one parquet file per date
+partition per request, like one part per INSERT, renamed into place only
+once every file is written.  No Spark job runs per request.  The ingest
+*volume* path is Structured Streaming over many requests
+(``streaming/ingest.py``), where the same row shape arrives via staged
+batches and goes through Spark's writer.
 """
 
 from __future__ import annotations
@@ -24,18 +24,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from remote_tsdb_clickhouse_spark import prompb
-from remote_tsdb_clickhouse_spark.model import NAME_LABEL, SAMPLES_SCHEMA
+from remote_tsdb_clickhouse_spark.model import ARROW_SAMPLES_SCHEMA, NAME_LABEL, SAMPLES_SCHEMA
 from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
-
-#: Arrow schema of the flatten; Spark reads ``ts`` as its UTC TimestampType.
-ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("ts", pa.timestamp("s", tz="UTC"), nullable=False),
-        pa.field("metric_name", pa.string(), nullable=False),
-        pa.field("labels", pa.list_(pa.string()), nullable=False),
-        pa.field("value", pa.float64(), nullable=False),
-    ]
-)
 
 #: Epoch seconds of 0001-01-01T00:00:00Z and 9999-12-31T23:59:59Z, the
 #: range of Python's ``datetime`` that bounds every stored ``ts``.
@@ -44,7 +34,7 @@ MAX_TS_S = 253_402_300_799
 
 
 def write_request_rows(req: prompb.WriteRequest) -> pa.Table:
-    """Flatten a WriteRequest into a canonical-schema Arrow table.
+    """Flatten a WriteRequest into an ``ARROW_SAMPLES_SCHEMA`` table.
 
     One row ``(ts, metric_name, labels, value)`` per sample; ms -> seconds
     truncation and ``__name__`` extraction per the reference semantics.
@@ -72,7 +62,7 @@ def write_request_rows(req: prompb.WriteRequest) -> pa.Table:
     if secs and (min(secs) < MIN_TS_S or max(secs) > MAX_TS_S):
         bad = next(t for t in secs if not MIN_TS_S <= t <= MAX_TS_S)
         raise ValueError(f"sample second {bad} is out of range (years 1-9999)")
-    return pa.table([secs, names, label_col, values], schema=ARROW_SCHEMA)
+    return pa.table([secs, names, label_col, values], schema=ARROW_SAMPLES_SCHEMA)
 
 
 def write_request_df(spark: SparkSession, req: prompb.WriteRequest) -> DataFrame:
@@ -90,6 +80,5 @@ class TimeseriesWriter:
         table = write_request_rows(req)
         if not len(table):
             return 0
-        df = self.store.spark.createDataFrame(table, SAMPLES_SCHEMA).coalesce(1)
-        self.store.append(df)
+        self.store.append(table)
         return len(table)

@@ -46,6 +46,40 @@ def test_fail_fast_on_missing_store(spark, tmp_path):
         build_server(args, spark=spark)
 
 
+def test_fail_fast_on_store_pyarrow_cannot_open(spark):
+    """/write lands files through pyarrow, so a store root pyarrow cannot
+    open is refused at startup, naming the path, not on the first write."""
+    args = parse_args(
+        ["--store", "s3a://bucket/samples", "--http", "127.0.0.1:0", "--create-if-missing"]
+    )
+    with pytest.raises(SystemExit, match="'s3a://bucket/samples' cannot be opened"):
+        build_server(args, spark=spark)
+
+
+def test_relative_store_path_lands_under_cwd(spark, tmp_path, monkeypatch):
+    """A scheme-less relative --store is resolved once against the working
+    directory, so Spark's scan and the pyarrow landing use one root."""
+    from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
+    from remote_tsdb_clickhouse_spark.sources.writer import TimeseriesWriter
+
+    monkeypatch.chdir(tmp_path)
+    args = parse_args(["--store", "rel/samples", "--http", "127.0.0.1:0", "--create-if-missing"])
+    build_server(args, spark=spark)
+    store = SamplesStore(spark, "rel/samples")
+    assert store.path == str(tmp_path / "rel" / "samples")
+    wr = prompb.WriteRequest(
+        timeseries=[
+            prompb.TimeSeries(
+                labels=[prompb.Label("__name__", "up")],
+                samples=[prompb.Sample(1.0, 1704067200000)],
+            )
+        ]
+    )
+    assert TimeseriesWriter(store).write(wr) == 1
+    assert [p.name for p in (tmp_path / "rel" / "samples").iterdir()] == ["ts_date=2024-01-01"]
+    assert [r.value for r in store.read().collect()] == [1.0]
+
+
 def test_cli_server_write_read_roundtrip(spark, tmp_path):
     import urllib.request
 

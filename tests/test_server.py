@@ -141,6 +141,34 @@ def test_out_of_range_timestamp_rejected(server):
         assert stored() == before
 
 
+def test_staleness_marker_read_back(server):
+    """The staleness marker 0x7ff0000000000002 is stored with its bits
+    (tests/test_store_writer.py) and a remote-read returns them unchanged:
+    the max() of a second holding only that sample does not canonicalize
+    the NaN."""
+    import struct
+
+    srv, app = server
+    stale = struct.unpack(">d", bytes.fromhex("7ff0000000000002"))[0]
+    assert _post(srv.port, "/write", _write_body((1.0, 1704067200000), (stale, 1704067215000)))[0] == 200
+    read_req = prompb.ReadRequest(
+        queries=[
+            ReadQuery(
+                start_ms=1704067200000,
+                end_ms=1704067260000,
+                matchers=(LabelMatcher(MatcherType.EQ, "__name__", "up"),),
+            )
+        ]
+    )
+    status, body = _post(srv.port, "/read", codec.encode_read_request(read_req))
+    assert status == 200
+    [series] = prompb.decode_read_response(codec.snappy_decompress(body)).results[0].timeseries
+    assert [(struct.pack(">d", s.value).hex(), s.timestamp) for s in series.samples] == [
+        ("3ff0000000000000", 1704067200000),
+        ("7ff0000000000002", 1704067215000),
+    ]
+
+
 def test_negative_ms_floors_to_previous_second(server, tmp_path):
     """ms -> s floors: -1 ms is 1969-12-31 23:59:59 in that day's partition."""
     from datetime import date, datetime

@@ -15,9 +15,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from remote_tsdb_clickhouse_spark import prompb
+from remote_tsdb_clickhouse_spark.model import ARROW_SAMPLES_SCHEMA
 from remote_tsdb_clickhouse_spark.sources.samples_store import SamplesStore
 from remote_tsdb_clickhouse_spark.sources.writer import (
-    ARROW_SCHEMA,
     MAX_TS_S,
     MIN_TS_S,
     TimeseriesWriter,
@@ -48,7 +48,7 @@ def test_write_request_flatten_semantics():
         [(35.5, 1704067200123)],  # ms with sub-second junk
     )
     table = write_request_rows(req)
-    assert table.schema == ARROW_SCHEMA
+    assert table.schema == ARROW_SAMPLES_SCHEMA
     rows = table.to_pylist()
     assert rows == [
         {
@@ -123,9 +123,8 @@ def _from_bits(h: str) -> float:
 def test_written_rows_bit_parity(spark, tmp_path):
     """An adversarial request is stored with exactly the expected rows,
     read back from the parquet files with pyarrow and with ``value``
-    compared as its 64-bit pattern.  Pinned current behaviour: Spark's
-    UnsafeRow canonicalizes every NaN, so the Prometheus staleness marker
-    0x7ff0000000000002 is stored as 0x7ff8000000000000."""
+    compared as its 64-bit pattern.  The Prometheus staleness marker
+    0x7ff0000000000002 keeps its bits, as in the reference's Float64."""
     day = 1704067200000  # 2024-01-01 00:00 UTC
     stale = "7ff0000000000002"
     req = prompb.WriteRequest(
@@ -182,7 +181,7 @@ def test_written_rows_bit_parity(spark, tmp_path):
             (d1, s1 + 15 * second, "http_requests_total", lbl, "7ff0000000000000"),
             (d1, s1, "http_requests_total", lbl, "fff0000000000000"),
             ("ts_date=2023-12-31", s1 - second, "http_requests_total", lbl, "7ff8000000000000"),
-            (d1, s1 + 60 * second, "", ["instance=h:9100"], "7ff8000000000000"),
+            (d1, s1 + 60 * second, "", ["instance=h:9100"], stale),
         ]
     )
 
@@ -344,11 +343,47 @@ def _shuffled_samples(spark, seed: int):
     return spark.createDataFrame(rows, SAMPLES_SCHEMA).repartition(3)
 
 
+#: Labelsets whose exact array<string> order a joined-string sort key gets
+#: wrong: a "\x00" inside a value, a list that is a prefix of another, an
+#: empty list, and non-ASCII values (code-point order is UTF-8 byte order;
+#: UTF-16 order would put the emoji before the ligature).
+_ADVERSARIAL_LABELS = [
+    [],
+    ["a=x"],
+    ["a=x", "b=y"],
+    ["a=x\x00b=y"],
+    ["a=x\x00"],
+    ["a=x", "b=y", "c=z"],
+    ["a=xé"],
+    ["a=x\ufb01"],
+    ["a=x\U0001f600"],
+    ["a=x", "b=\U0001f600"],
+]
+
+
+def _adversarial_table(seed: int) -> pa.Table:
+    """Driver-side rows (the ``/write`` landing input) of two names times
+    the labelsets above, one sample every 4 minutes from 22:00 to 00:36,
+    in random order."""
+    import random
+
+    base = 1704146400  # 2024-01-01 22:00 UTC
+    rows = [
+        (base + 240 * i, name, labels, float(i))
+        for name in ("m0", "m\x00")
+        for labels in _ADVERSARIAL_LABELS
+        for i in range(40)
+    ]
+    random.Random(seed).shuffle(rows)
+    return pa.table(list(map(list, zip(*rows))), schema=ARROW_SAMPLES_SCHEMA)
+
+
 def test_store_files_sorted_after_every_write(spark, tmp_path, unsorted_store_files):
     """Every write path must leave each file physically sorted by
     (metric_name, labels, ts): the page skipping behind a pushed name
     filter depends on it.  A sort that does not lead with the partition
-    column is silently replaced by Spark's own sort on ts_date alone."""
+    column is silently replaced by Spark's own sort on ts_date alone, and
+    the Arrow landing must reproduce Spark's array<string> order exactly."""
     store = make_store(spark, tmp_path)
     root = str(tmp_path / "samples")
     store.append(_shuffled_samples(spark, 1))
@@ -358,13 +393,132 @@ def test_store_files_sorted_after_every_write(spark, tmp_path, unsorted_store_fi
         "ts_date=2024-01-02",
     ]
     assert unsorted_store_files(root) == []
+    store.append(_adversarial_table(3))
+    store.append(_adversarial_table(4))
+    assert unsorted_store_files(root) == []
     # survivors of both days are read back from several files and rewritten
     store.delete_time_range(datetime(2024, 1, 1, 23), datetime(2024, 1, 2, 0, 10))
     assert unsorted_store_files(root) == []
     store.compact(files_per_partition=1)
     assert unsorted_store_files(root) == []
-    # 280 of each series' 600 samples per batch fall in (23:00, 00:10]
-    assert store.read().count() == 2 * 40 * (600 - 280)
+    # 280 of each series' 600 samples per batch fall in (23:00, 00:10],
+    # and 17 of each adversarial series' 40
+    n_adversarial = 2 * 2 * len(_ADVERSARIAL_LABELS) * (40 - 17)
+    assert store.read().count() == 2 * 40 * (600 - 280) + n_adversarial
+
+
+def test_failed_landing_publishes_nothing(spark, tmp_path, monkeypatch):
+    """A request spanning two days whose second file fails to write leaves
+    the store as it was: no data file and no temporary file.  Neither does
+    a table in another schema."""
+    from remote_tsdb_clickhouse_spark.sources import samples_store
+
+    root = tmp_path / "samples"
+    writer = TimeseriesWriter(SamplesStore(spark, str(root)))
+    day = 1704067200000  # 2024-01-01 00:00 UTC
+    real_write, written = samples_store.pq.write_table, []
+
+    def failing_second_write(*args, **kwargs):
+        if written:
+            raise OSError("disk full")
+        written.append(args[1])
+        return real_write(*args, **kwargs)
+
+    monkeypatch.setattr(samples_store.pq, "write_table", failing_second_write)
+    with pytest.raises(OSError, match="disk full"):
+        writer.write(wr("m", [], [(1.0, day), (2.0, day + 86_400_000)]))
+    assert len(written) == 1
+    assert [p for p in root.rglob("*") if p.is_file()] == []
+    # a table in another schema (a nullable list element) is refused whole
+    other = write_request_rows(wr("m", [], [(1.0, day)]))
+    other = other.cast(other.schema.set(2, pa.field("labels", pa.list_(pa.string()), nullable=False)))
+    with pytest.raises(ValueError, match="expected"):
+        writer.store.append(other)
+    assert [p for p in root.rglob("*") if p.is_file()] == []
+    monkeypatch.undo()
+    assert writer.write(wr("m", [], [(1.0, day)])) == 1
+    assert [r.value for r in writer.store.read().collect()] == [1.0]
+
+
+def _rows_by_bits(rows):
+    """(epoch second, name, labels, value bits) multiset of ``rows``."""
+    return Counter((s, n, tuple(lb), _bits(v)) for s, n, lb, v in rows)
+
+
+def test_landed_files_match_spark_format(spark, tmp_path):
+    """A /write lands parquet in Spark's own file format, so landed files
+    and Spark-written ones (import_tsv, compact) form one store: one
+    schema for pyarrow.dataset, the same rows through store.read()."""
+    import pyarrow.dataset as ds
+
+    root = tmp_path / "samples"
+    store = SamplesStore(spark, str(root))
+    writer = TimeseriesWriter(store)
+    day = 1704067200000  # 2024-01-01 00:00 UTC
+    writer.write(
+        wr("up", [("job", "a"), ("path", "/ü")], [(float(i), day + i * 15_000) for i in range(64)])
+    )
+    writer.write(wr("down", [], [(-0.0, day - 1000), (float("inf"), day)]))
+    landed = sorted(glob.glob(f"{root}/*/*.parquet"))
+    assert len(landed) == 3
+    # the schema Spark gives the same rows from createDataFrame
+    spark_schema = ARROW_SAMPLES_SCHEMA.set(0, pa.field("ts", pa.timestamp("ns"), nullable=False))
+    for f in landed:
+        assert pq.read_schema(f).remove_metadata() == spark_schema
+        md = pq.ParquetFile(f).metadata
+        assert md.schema.column(0).physical_type == "INT96"
+        assert b"ARROW:schema" not in (md.metadata or {})
+        name = md.row_group(0).column(1)
+        assert name.path_in_schema == "metric_name"
+        assert name.has_column_index and name.has_offset_index
+    tsv = tmp_path / "dump.tsv"
+    tsv.write_text("up\tjob=b\t1704067230000\t2.5\nup\t\t1704153600000\t-1.0\n")
+    assert store.import_tsv(str(tsv)) == 2
+
+    def spark_rows():
+        return _rows_by_bits(
+            (r[0], r[1], r[2], r[3])
+            for r in store.read()
+            .select(F.col("ts").cast("long"), "metric_name", "labels", "value")
+            .collect()
+        )
+
+    def arrow_rows():
+        # Spark writes file-derived frames as nullable columns, so the
+        # schemas differ in nullability only: they unify, and the dataset
+        # reads the same rows whichever file's schema it starts from
+        files = sorted(glob.glob(f"{root}/*/*.parquet"))
+        unified = pa.unify_schemas([pq.read_schema(f) for f in files])
+        got = set()
+        for schema, order in [(unified, files), (None, files), (None, files[::-1])]:
+            t = ds.dataset(order, format="parquet", schema=schema).to_table()
+            rows = _rows_by_bits(
+                zip(
+                    [ns // 10**9 for ns in t["ts"].cast(pa.int64()).to_pylist()],
+                    t["metric_name"].to_pylist(),
+                    t["labels"].to_pylist(),
+                    t["value"].to_pylist(),
+                )
+            )
+            got.add(frozenset(rows.items()))
+        assert len(got) == 1
+        return rows
+
+    before = spark_rows()
+    assert sum(before.values()) == 68
+    assert arrow_rows() == before
+    store.compact(files_per_partition=1)
+    assert spark_rows() == before
+    assert arrow_rows() == before
+
+    # the first and last second of years 1-9999 land and read back exactly
+    edge = SamplesStore(spark, str(tmp_path / "edge"))
+    TimeseriesWriter(edge).write(wr("m", [], [(1.0, MIN_TS_S * 1000), (2.0, MAX_TS_S * 1000 + 999)]))
+    got = edge.read().select(F.col("ts").cast("long"), F.col("ts_date").cast("string"), "value")
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (MIN_TS_S, "0001-01-01", 1.0),
+        (MAX_TS_S, "9999-12-31", 2.0),
+    ]
 
 
 def test_tsv_export_roundtrip(spark, tmp_path):

@@ -88,7 +88,11 @@ alone (killed by pyarrow reads of every written file), and the
 alternation guard of the ``__name__`` regex literal prefix — both
 KILLED.  Batch 20 (M107-M108): the ``/write`` frame's ``coalesce(1)``
 (one file per date partition per request) and the flatten's
-years-1-9999 timestamp bounds check — both KILLED.  The screen earned
+years-1-9999 timestamp bounds check — both KILLED; M107 is retired, its
+target gone since ``/write`` lands its Arrow table without a Spark job.
+Batch 21 (M109-M110): that landing's parquet page index (killed by the
+Spark-format test) and the ``labels`` key of its sort (killed by pyarrow
+reads of every written file) — both KILLED.  The screen earned
 its keep on first contact, surviving six
 times before the gaps were closed (plus one killer-list correction:
 M50's CH-leg trunc test lives in test_read_plan.py, not the sink file):
@@ -748,16 +752,22 @@ MUTANTS = [
      '    if False:',
      ["tests/test_matcher_properties.py"]),
     # -- batch 20: the Arrow-backed /write frame -----------------------------
-    ("M107", "/write frame not coalesced (one file per input slice, not per request)",
-     WR,
-     "createDataFrame(table, SAMPLES_SCHEMA).coalesce(1)",
-     "createDataFrame(table, SAMPLES_SCHEMA)",
-     ["tests/test_store_writer.py"]),
     ("M108", "/write timestamp bounds check dropped (years 1-9999 accepted past)",
      WR,
      "if secs and (min(secs) < MIN_TS_S or max(secs) > MAX_TS_S):",
      "if False:",
      ["tests/test_server.py"]),
+    # -- batch 21: the Arrow landing of /write -------------------------------
+    ("M109", "/write landing written without the parquet page index",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     "write_page_index=True,",
+     "write_page_index=False,",
+     ["tests/test_store_writer.py"]),
+    ("M110", "/write landing sort drops the labels key",
+     "remote_tsdb_clickhouse_spark/sources/samples_store.py",
+     'order = pc.sort_indices(keys, [(k, "ascending") for k in SORT_KEYS])',
+     'order = pc.sort_indices(keys, [(k, "ascending") for k in SORT_KEYS if k != "labels"])',
+     ["tests/test_store_writer.py"]),
 ]
 
 
